@@ -46,33 +46,8 @@ Two append modes trade write amplification against read fan-in:
     mirroring the reference's append-only contract; a colliding id would
     corrupt posting order and is rejected up front (B2 analog).
 
-* ``mode="segment"``: the 100-TB fast path — untouched base rows are **not
-  rewritten at all**. The new generation holds ONLY the delta-touched
-  terms' re-merged rows; a term-tombstone list hides those terms' stale
-  rows in older segments, and :func:`postings.compose_segment_postings`
-  stacks the segments at load time, inflating stale segments' ``max_z`` /
-  deflating ``min_z`` by the avgdl-ratio bound (sound pruning; serving is
-  EXACT because final scores always recompute from raw tf/dl under the
-  current avgdl). :func:`compact_index` folds the stack back into one
-  generation that is byte-identical to a scratch union build — block
-  boundaries are avgdl-free and each visible row was produced by the exact
-  merge kernel at SOME append, so compaction is a map-only metadata refresh
-  plus a rewrite.
-
-Scale notes (100 TB): the delta pays tokenize + shuffle only for ITS OWN
-postings. In rewrite mode the base additionally pays one
-embarrassingly-parallel metadata rewrite (every byte rewritten once per
-append — amortize by batching appends); in segment mode it pays NOTHING
-per append beyond the touched-term re-merge, at the cost of one extra
-parquet scan branch per segment at serve time — compact on a cadence
-(``max_segments``) exactly like an LSM store.
-
-Honest caveat on ``mode="segment"``: tombstoning is TERM-granular, and
-under a Zipfian vocabulary nearly every delta touches the head terms that
-hold most of the index's bytes — so segment mode's write savings over
-rewrite mode is mostly the untouched-TAIL re-merge plus the whole
-untouched metadata refresh, not the head bytes. That is why the third
-mode exists:
+  A rewrite on a segment stack re-merges every visible row instead (a
+  shard's blocks span segments, so the map-only refresh does not apply).
 
 * ``mode="lsm"`` (Lucene-style per-segment postings): the delta writes its
   OWN complete mini-index — every delta term's posting lists built from
@@ -99,14 +74,14 @@ mode exists:
     load and re-derives idf/n_shards under the current corpus — so the
     dictionary write is O(delta vocabulary) too.
 
-  Compaction of an lsm stack re-merges every visible row through the
-  exact build kernel (:func:`postings.salt_partials` +
-  :func:`postings.merge_salted`) — byte-identical to a scratch union
-  build by construction; the metadata-refresh shortcut only applies to
-  term-granular stacks, where each (term, salt) is visible from exactly
-  one segment. ``mode="segment"`` appends cannot stack on an lsm index
-  (their union-dictionary and one-segment-per-shard invariants would
-  break) — compact first, or keep using lsm.
+  Stale segments' block bounds were written under an older avgdl; the
+  compose ratio-adjusts them (sound pruning) and final scores recompute
+  from raw tf/dl, so serving a stack is EXACT. Compaction
+  (:func:`compact_index`, or ``max_segments`` on append) re-merges every
+  visible row through the exact build kernel
+  (:func:`postings.salt_partials` + :func:`postings.merge_salted`) —
+  byte-identical to a scratch union build by construction — once per
+  cadence instead of once per append.
 """
 
 from __future__ import annotations
@@ -131,7 +106,6 @@ from sparkforward.postings import (
     _build_partials,
     attach_term_meta,
     compose_segment_postings,
-    compose_segment_terms,
     current_terms,
     head_map,
     index_data_root,
@@ -150,8 +124,8 @@ _ENGINE_STATS_KEYS = frozenset(
     {
         "n_docs", "avgdl", "k1", "b", "layout", "block_size",
         "salt_threshold", "n_salt", "n_buckets", "target_shard_postings",
-        "head", "sum_dl", "data_dir", "segments", "terms_layout",
-        "terms_dir", "deletes_dir", "data_avgdl",
+        "head", "sum_dl", "data_dir", "segments", "terms_dir",
+        "deletes_dir", "data_avgdl",
     }
 )
 
@@ -320,13 +294,12 @@ def append_to_index(
     (streaming.stream_ingest_lsm's exactly-once recipe).
 
     ``mode="rewrite"`` produces a single generation byte-identical to a
-    scratch union build; ``mode="segment"`` stacks a segment holding only
-    the touched terms; ``mode="lsm"`` stacks the delta's own complete
+    scratch union build; ``mode="lsm"`` stacks the delta's own complete
     mini-index — O(delta bytes) written, no base row read (see module
-    docstring). ``max_segments`` (segment/lsm modes) auto-compacts once
-    the stack exceeds that many segments.
+    docstring). ``max_segments`` (lsm mode) auto-compacts once the stack
+    exceeds that many segments.
     """
-    if mode not in ("rewrite", "segment", "lsm"):
+    if mode not in ("rewrite", "lsm"):
         raise ValueError(f"append_to_index: unknown mode {mode!r}")
     if extra_stats:
         clash = sorted(set(extra_stats) & _ENGINE_STATS_KEYS)
@@ -338,13 +311,7 @@ def append_to_index(
             )
     with open(os.path.join(path, "stats.json")) as fh:
         stats = json.load(fh)
-    additive_base = stats.get("terms_layout") == "additive"
-    if mode == "segment" and additive_base:
-        raise ValueError(
-            "append_to_index: mode='segment' cannot stack on an lsm index "
-            "(its union-dictionary and one-segment-per-shard invariants do "
-            "not hold there) — compact_index first, or keep using mode='lsm'"
-        )
+    stacked = bool(stats.get("segments"))
     if stats.get("layout") != "block":
         raise ValueError(
             "append_to_index requires the block-granular layout; "
@@ -444,27 +411,27 @@ def append_to_index(
         touched_terms = F.broadcast(delta_df.select("term"))
 
         # which base rows feed the merge kernel, per mode:
-        #   rewrite/segment — the delta-TOUCHED terms' rows (their lists are
-        #     re-merged whole, so older copies can be dropped/tombstoned);
+        #   rewrite — the delta-TOUCHED terms' rows (their lists are
+        #     re-merged whole, so older copies can be dropped);
         #   lsm — only the RESHARDED terms' rows (union df pushed the term's
         #     pow-2 doc-modulo up, so every visible row of it must re-salt;
         #     a df-doubling event — each term reshards O(log df) times over
         #     the index's life). All other delta terms contribute ONLY their
         #     delta partials: their mini posting lists land in this segment
         #     and concatenate with base rows at compose time.
-        #   rewrite on an ADDITIVE base — every visible row: a (term, salt)
-        #     shard may span segments with colliding local block numbers, so
-        #     the map-only metadata refresh is unsound there; the full
-        #     re-merge is what a scratch union build does, byte-identically
-        #     (the kernel stable-sorts by doc id; head/avgdl are pure
-        #     functions of the union corpus).
+        #   rewrite on a STACK — every visible row: a (term, salt) shard may
+        #     span segments with colliding local block numbers, so the
+        #     map-only metadata refresh is unsound there; the full re-merge
+        #     is what a scratch union build does, byte-identically (the
+        #     kernel stable-sorts by doc id; head/avgdl are pure functions
+        #     of the union corpus).
         resharded: list[str] = []
         if mode == "lsm":
             stored = _stored_head(stats, base_terms)
             resharded = sorted(
                 t for t, m in head.items() if int(stored.get(t, 1)) != int(m)
             )
-        if mode == "rewrite" and additive_base:
+        if mode == "rewrite" and stacked:
             base_input = base_post
         elif mode == "lsm":
             if resharded:
@@ -502,7 +469,7 @@ def append_to_index(
         n_buckets = int(stats["n_buckets"])
 
         if mode == "rewrite":
-            if additive_base:
+            if stacked:
                 _write_postings(touched_rows, gen_dir, n_buckets)
             else:
                 untouched = base_post.join(touched_terms, "term", "left_anti")
@@ -512,33 +479,24 @@ def append_to_index(
                 _write_postings(
                     touched_rows.unionByName(refreshed), gen_dir, n_buckets
                 )
+            attach_term_meta(df_union, float(n_union), head).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(gen_dir, "terms"))
         else:
             _write_postings(touched_rows, gen_dir, n_buckets)
-            # term tombstones hide stale rows in every OLDER segment:
-            # segment mode tombstones all touched terms (their lists were
-            # re-merged whole); lsm tombstones only the resharded ones
-            # (everything else concatenates) — both driver-bounded
-            tomb = (
-                delta_df.select("term")
-                if mode == "segment"
-                else spark.createDataFrame(
-                    [(t,) for t in resharded], "term string"
-                )
-            )
-            tomb.write.mode("overwrite").parquet(
+            # term tombstones hide the resharded terms' stale rows in every
+            # OLDER segment (everything else concatenates) — a short list
+            spark.createDataFrame(
+                [(t,) for t in resharded], "term string"
+            ).write.mode("overwrite").parquet(
                 os.path.join(gen_dir, "tombstones")
             )
-        if mode == "lsm":
             # additive dictionary: the DELTA's (term, df) only — summed and
             # re-idf'd under the current corpus at load
             # (postings.compose_segment_terms)
             delta_df.select("term", "df").write.mode("overwrite").parquet(
                 os.path.join(gen_dir, "terms")
             )
-        else:
-            attach_term_meta(df_union, float(n_union), head).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(gen_dir, "terms"))
         delta_df.unpersist()
 
         # generation manifest: lineage + metrics for the append itself.
@@ -567,44 +525,39 @@ def append_to_index(
             "sum_dl": sum_dl_union,
             "data_dir": f"gen-{gen_no}",
             # re-pin the union head map: every visible row is now salted
-            # under it (rewrite/segment re-merge touched terms whole; lsm
-            # re-merges exactly the resharded ones; untouched terms keep
-            # their df, hence their modulus)
+            # under it (rewrite re-merges touched terms whole; lsm re-merges
+            # exactly the resharded ones; untouched terms keep their df,
+            # hence their modulus)
             "head": {t: int(m) for t, m in head.items()},
         }
-        # the new generation carries the full union dictionary (lsm: the
-        # additive delta) — a delete-generation terms_dir override is
-        # superseded; data_avgdl folds into the segment-0 entry (stacks)
-        # or is obsolete (rewrite refreshed every bound under ``avgdl``)
-        if mode != "lsm":
-            new_stats.pop("terms_dir", None)
+        # data_avgdl folds into the segment-0 entry (lsm) or is obsolete
+        # (rewrite refreshed every bound under ``avgdl``)
         new_stats.pop("data_avgdl", None)
-        if mode == "segment" or mode == "lsm":
+        if mode == "lsm":
             segs = stats.get("segments") or [
-                # first segment append: the committed base becomes segment
-                # 0 — its bounds were written under data_avgdl (== avgdl
-                # unless docs were deleted from the base since)
+                # first lsm append: the committed base becomes segment 0 —
+                # its bounds were written under data_avgdl (== avgdl unless
+                # docs were deleted from the base since)
                 {
                     "dir": stats.get("data_dir") or "",
                     "avgdl": float(stats.get("data_avgdl", stats["avgdl"])),
                     "tombstones": None,
                 }
             ]
-            entry = {
-                "dir": f"gen-{gen_no}",
-                "avgdl": avgdl,
-                "tombstones": f"gen-{gen_no}/tombstones",
-            }
-            if mode == "lsm":
-                entry["kind"] = "lsm"
-                # the stack's dictionary is now additive: newest segments
-                # hold delta-local (term, df) summed at load
-                new_stats["terms_layout"] = "additive"
-            new_stats["segments"] = segs + [entry]
+            new_stats["segments"] = segs + [
+                {
+                    "dir": f"gen-{gen_no}",
+                    "avgdl": avgdl,
+                    "tombstones": f"gen-{gen_no}/tombstones",
+                    "kind": "lsm",
+                }
+            ]
         else:
-            # rewrite: one complete generation, full union dictionary
-            new_stats.pop("segments", None)
-            new_stats.pop("terms_layout", None)
+            # rewrite: one complete generation whose full union dictionary
+            # supersedes a delete-generation terms_dir override
+            # (``terms_layout`` is a key older lsm stacks carry)
+            for k in ("segments", "terms_layout", "terms_dir"):
+                new_stats.pop(k, None)
         if extra_stats:
             # engine-owned keys were rejected at entry; caller keys
             # (stream_batch_id, app metadata) commit atomically here
@@ -651,11 +604,9 @@ def delete_docs(
     visible corpus (mirrors the reference's missing-ID raise, S3) and not
     be deleted already.
 
-    Works on single-generation indexes AND term-granular segment stacks
-    (the scan runs over the composed visible rows; the compose's
-    avgdl-ratio bound adjustment tracks the moved stats automatically).
-    Only lsm (additive-dictionary) stacks must compact first — their
-    per-segment dictionary sum cannot absorb a full-union rewrite.
+    Works on single-generation indexes; a segment stack must compact
+    first — its additive per-segment dictionary sum cannot absorb a
+    full-union rewrite.
     """
     with open(os.path.join(path, "stats.json")) as fh:
         stats = json.load(fh)
@@ -664,10 +615,10 @@ def delete_docs(
             "delete_docs requires the block-granular layout; "
             f"index at {path} has layout={stats.get('layout')!r} — rebuild it"
         )
-    if stats.get("terms_layout") == "additive":
+    if stats.get("segments"):
         raise ValueError(
-            "delete_docs on an lsm (additive-dictionary) stack is "
-            "unsupported — run compact_index first (the additive "
+            "delete_docs on a segment stack is unsupported — run "
+            "compact_index first (the additive "
             "per-segment dictionary sum cannot absorb a full-union "
             "rewrite; takedown batches ride the compaction cadence)"
         )
@@ -693,12 +644,7 @@ def delete_docs(
         if os.path.basename(d) not in referenced:
             shutil.rmtree(d, ignore_errors=True)
 
-    # the VISIBLE posting rows: term-granular stacks compose with their
-    # tombstones applied (a doc's postings live in exactly one visible
-    # row per term), single generations read directly. Deleting from a
-    # stack needs no data rewrite either — serve-side masking is
-    # segment-agnostic, and the compose's avgdl-ratio bound adjustment
-    # (driven by stats.avgdl, which this commit moves) stays sound.
+    # the single generation's posting rows (stacks were refused above)
     post = _visible_base(spark, path, stats)
     dels = new_ids  # ships in the kernel closure (bounded)
 
@@ -837,25 +783,19 @@ def delete_docs(
 
 
 def compact_index(spark: SparkSession, path: str) -> PostingIndex:
-    """Fold a segment stack back into a single generation — byte-identical
-    to a from-scratch build of the same corpus.
+    """Fold a segment stack and/or tombstoned deletes back into a single
+    generation — byte-identical to a from-scratch build of the same corpus.
 
-    Term-granular stacks (``mode="segment"``): every visible (term, salt)
-    shard lives whole in exactly one segment, block boundaries and blobs
-    are avgdl-free, and every visible row was produced by the exact merge
-    kernel at some append — so compaction is a MAP-ONLY metadata refresh
-    (recompute max_z/min_z under the current avgdl — bit-identical to what
-    a scratch build computes for the same blocks) plus one bucketed
-    rewrite. No tokenize, no merge shuffle.
-
-    LSM stacks (``mode="lsm"``, ``terms_layout == "additive"``): a shard's
-    rows span segments, so the visible rows re-merge through the exact
-    build kernel (:func:`postings.salt_partials` +
-    :func:`postings.merge_salted`) under the pinned head map — the same
-    inputs a scratch union build would stable-sort and re-encode, hence
-    byte-identical output. The union dictionary is materialized from the
-    additive per-segment tables (:func:`postings.compose_segment_terms`).
-    One merge shuffle over the index — the LSM cadence cost, paid once per
+    A stack's (term, salt) shard has rows in several segments, and
+    tombstone drops change blob bytes, so the visible rows re-merge through
+    the exact build kernel (:func:`postings.salt_partials` +
+    :func:`postings.merge_salted`) — the same inputs a scratch build would
+    stable-sort and re-encode, hence byte-identical output. Without
+    deletes the head map is the stored one (the moduli the visible rows
+    were written under); deletes shrink dfs, so it re-derives from the
+    SURVIVING dictionary, as a scratch build over the survivors would.
+    The union dictionary comes from :func:`postings.current_terms`. One
+    merge shuffle over the index — the LSM cadence cost, paid once per
     ``max_segments`` appends instead of per append.
     """
     with open(os.path.join(path, "stats.json")) as fh:
@@ -864,61 +804,33 @@ def compact_index(spark: SparkSession, path: str) -> PostingIndex:
     if not stats.get("segments") and not len(deletes):
         return PostingIndex.load(spark, path)
 
-    additive = stats.get("terms_layout") == "additive"
-    if stats.get("segments"):
-        visible = compose_segment_postings(
-            spark, path, stats, adjust_bounds=False
-        ).drop("bucket")
-    else:  # deletes-only compaction of a single-generation index
-        visible = spark.read.parquet(
-            os.path.join(index_data_root(path, stats), "postings")
-        ).drop("bucket")
+    visible = _visible_base(spark, path, stats)
     terms_df = current_terms(spark, path, stats)
-    if additive or len(deletes):
-        # the full re-merge path: additive stacks interleave one shard's
-        # blocks across segments, and tombstone drops change blob bytes —
-        # both disqualify the map-only refresh. Deletes also shrink dfs,
-        # so the head map re-derives from the SURVIVING dictionary (what a
-        # scratch build over the survivors would compute).
-        if len(deletes):
-            salt_threshold = int(stats["salt_threshold"])
-            head = head_map(
-                [
-                    (r["term"], int(r["df"]))
-                    for r in terms_df.filter(
-                        F.col("df") > salt_threshold
-                    ).collect()
-                ],
-                salt_threshold,
-                int(stats["n_salt"]),
-                int(stats.get("target_shard_postings", TARGET_SHARD_POSTINGS)),
-            )
-        else:
-            head = {t: int(m) for t, m in (stats.get("head") or {}).items()}
-        salted = salt_partials(
-            visible.select("term", "n", "doc_blob", "tf_blob", "dl_blob"),
-            head,
+    if len(deletes):
+        salt_threshold = int(stats["salt_threshold"])
+        head = head_map(
+            [
+                (r["term"], int(r["df"]))
+                for r in terms_df.filter(F.col("df") > salt_threshold).collect()
+            ],
+            salt_threshold,
+            int(stats["n_salt"]),
+            int(stats.get("target_shard_postings", TARGET_SHARD_POSTINGS)),
         )
-        refreshed = merge_salted(
-            salted, head, float(stats["avgdl"]), int(stats["block_size"]),
-            drop_docs=deletes if len(deletes) else None,
+        # dictionary already holds surviving dfs; refresh n_shards under
+        # the re-derived head (idf unchanged — same df, n_docs)
+        terms_df = attach_term_meta(
+            terms_df.select("term", "df"), float(stats["n_docs"]), head
         )
-        if len(deletes):
-            # dictionary already holds surviving dfs; refresh n_shards
-            # under the re-derived head (idf unchanged — same df, n_docs)
-            terms_df = attach_term_meta(
-                terms_df.select("term", "df"), float(stats["n_docs"]), head
-            )
     else:
-        # map-only path: pin the moduli the visible rows were ACTUALLY
-        # written under (pre-round-7 stacks have no stored head — derive
-        # it from the dictionary rather than pinning a wrong empty map,
-        # which would make a later lsm append reshard the whole head)
         head = _stored_head(stats, terms_df)
-        refreshed = visible.select(*_BLOCK_COLS).mapInPandas(
-            _refresh_block_meta(float(stats["avgdl"])),
-            schema=BLOCK_POSTING_SCHEMA,
-        )
+    salted = salt_partials(
+        visible.select("term", "n", "doc_blob", "tf_blob", "dl_blob"), head
+    )
+    refreshed = merge_salted(
+        salted, head, float(stats["avgdl"]), int(stats["block_size"]),
+        drop_docs=deletes if len(deletes) else None,
+    )
     gen_no = _next_gen(stats)
     gen_dir = os.path.join(path, f"gen-{gen_no}")
     _write_postings(refreshed, gen_dir, int(stats["n_buckets"]))

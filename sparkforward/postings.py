@@ -340,10 +340,11 @@ def decode_blocked_posting_list(
 def compose_segment_postings(
     spark: SparkSession, path: str, stats: dict, adjust_bounds: bool = True
 ) -> DataFrame:
-    """Visible postings of an LSM segment stack (append.py mode="segment").
+    """Visible postings of an LSM segment stack (append.py mode="lsm").
 
-    The visible set is the union over segments, where a term re-merged by a
-    NEWER segment tombstones its rows in every older one. Stale segments'
+    The visible set is the union over segments, where a term a NEWER
+    segment rewrote whole (an lsm reshard) tombstones its rows in every
+    older one. Stale segments'
     block bounds were computed under THEIR avgdl; the current avgdl can move
     true z by at most the ratio avgdl_cur/avgdl_seg (monotone denominator
     bound: z = tf*(k1+1)/(tf + k1*(1-b) + k1*b*dl/avgdl), and for r =
@@ -360,9 +361,9 @@ def compose_segment_postings(
     and compactor, which drop or recompute the metadata anyway.
 
     **Cross-segment block numbering** (the serve path,
-    ``adjust_bounds=True``): per-segment (LSM, append.py mode="lsm")
-    postings give one (term, salt) shard block rows in SEVERAL segments,
-    each numbered 0..B-1 locally. The composed view renumbers them as
+    ``adjust_bounds=True``): per-segment postings give one (term, salt)
+    shard block rows in SEVERAL segments, each numbered 0..B-1 locally.
+    The composed view renumbers them as
     ``segment_ordinal << 24 | block_no`` so that sorting by the (still
     int32) ``block_no`` recovers GLOBAL doc order — appends are
     id-monotone, so segment order IS doc order, and every block is
@@ -408,19 +409,19 @@ def compose_segment_postings(
 
 
 def compose_segment_terms(spark: SparkSession, path: str, stats: dict) -> DataFrame:
-    """Union term dictionary of an ADDITIVE (LSM) segment stack.
+    """Union term dictionary of an LSM segment stack.
 
     LSM segments (append.py mode="lsm") store only their DELTA's term
     frequencies — O(delta vocabulary) written per append instead of the
     whole union dictionary. Each document is counted in exactly one
     segment, so the union df is the plain sum: walk newest -> oldest,
-    taking additive segments' delta-local tables until the newest
-    NON-additive segment (a built base or a term-granular append, whose
-    terms table IS the union as of its commit), then sum and re-derive
-    idf under the CURRENT corpus size + per-term shard counts from the
-    pinned head map in ``stats`` — the same :func:`attach_term_meta`
-    expression a scratch build runs, so composed metadata is bit-identical
-    to a from-scratch union build's.
+    taking ``kind == "lsm"`` segments' delta-local tables until the
+    newest other segment (the built base, or an older index's
+    term-granular append — its terms table IS the union as of its
+    commit), then sum and re-derive idf under the CURRENT corpus size +
+    per-term shard counts from the pinned head map in ``stats`` — the
+    same :func:`attach_term_meta` expression a scratch build runs, so
+    composed metadata is bit-identical to a from-scratch union build's.
     """
     parts = []
     for seg in reversed(stats["segments"]):
@@ -450,16 +451,17 @@ def compose_segment_terms(spark: SparkSession, path: str, stats: dict) -> DataFr
 def current_terms(spark: SparkSession, path: str, stats: dict) -> DataFrame:
     """The committed index's CURRENT term dictionary, whatever its layout.
 
-    Resolution order: an explicit ``terms_dir`` override (written by
+    Resolution order: the additive per-segment sum (segment stacks), then
+    an explicit ``terms_dir`` override (written by
     :func:`append.delete_docs` — the postings stay in place, only the
     dictionary and the tombstone sidecar move to a new generation), then
-    the additive per-segment sum (LSM stacks), then the plain
-    ``data_dir/terms`` table. Shared by the loader, the appender and the
-    compactor so every maintenance op sees the same dictionary.
+    the plain ``data_dir/terms`` table. Shared by the loader, the
+    appender and the compactor so every maintenance op sees the same
+    dictionary.
     """
-    if stats.get("terms_layout") == "additive":
-        # LSM stack — the compose itself honors a pre-stack terms_dir
-        # override for the base segment's union table
+    if stats.get("segments"):
+        # the compose itself honors a pre-stack terms_dir override for the
+        # base segment's union table
         return compose_segment_terms(spark, path, stats)
     td = stats.get("terms_dir")
     if td:

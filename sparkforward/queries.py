@@ -369,53 +369,6 @@ def _appended_index(spark: SparkSession, sf_dir: str):
     return index
 
 
-def _segmented_index(spark: SparkSession, sf_dir: str):
-    """An index grown to the full corpus by TWO stacked LSM segment appends
-    (70% -> 85% -> 100%): head terms are touched by both deltas, so the
-    second append re-merges rows the first one produced, and serving reads
-    a 3-deep segment stack with ratio-adjusted stale bounds."""
-    import tempfile
-
-    from sparkforward.append import append_to_index
-    from sparkforward.postings import build_inverted_index
-
-    hit = _WAND_INDEX_CACHE.get(spark, ("segmented", sf_dir))
-    if hit is not None:
-        return hit[0]
-    docs = load_documents(spark, sf_dir)
-    d = F.col("doc_id").cast("long")
-    hi = int(docs.agg(F.max(d)).collect()[0][0])
-    c1, c2 = hi * 7 // 10, hi * 17 // 20
-    path = tempfile.mkdtemp(prefix="sfwd_segidx_")
-    build_inverted_index(
-        docs.filter(d < c1), path,
-        salt_threshold=100, n_salt=4, num_partitions=8,
-    )
-    append_to_index(
-        spark, path, docs.filter((d >= c1) & (d < c2)),
-        num_partitions=8, mode="segment",
-    )
-    index = append_to_index(
-        spark, path, docs.filter(d >= c2), num_partitions=8, mode="segment"
-    ).cache()
-    _WAND_INDEX_CACHE.put(spark, ("segmented", sf_dir), (index, path))
-    return index
-
-
-def q_bm25_segment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSM segment-mode incremental maintenance under the hash gate: build
-    70% of the corpus, stack two segment appends (sparkforward.append
-    mode="segment" — untouched base rows never rewritten; term tombstones +
-    avgdl-ratio-adjusted stale bounds at load), and serve WAND top-10 from
-    the 3-segment stack. Serving a segment stack is EXACT (scores recompute
-    from raw tf/dl under the current avgdl; adjusted bounds only prune),
-    so rows must equal ``bm25_topk`` and the entry shares its oracle.
-    """
-    from sparkforward.wand import wand_topk
-
-    return wand_topk(_segmented_index(spark, sf_dir), queries_df(spark), k=K_FINAL)
-
-
 def _lsm_index(spark: SparkSession, sf_dir: str):
     """An index grown to the full corpus by TWO stacked Lucene-style LSM
     appends (70% -> 85% -> 100%, append.py mode="lsm"): each delta writes
@@ -2583,6 +2536,7 @@ def _collect_qvecs(spark, sf_dir, mapping) -> dict[str, list[float]]:
         # Spark job — the same driver-side shortcut as query tokenization.
         # float32 -> Python float upcasts identically to a Spark collect,
         # so downstream dot products are bit-identical.
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         path = f"{sf_dir}/embeddings.parquet"
@@ -2593,7 +2547,9 @@ def _collect_qvecs(spark, sf_dir, mapping) -> dict[str, list[float]]:
         rows = dict(zip(tbl["vec_id"].to_pylist(), tbl["embedding"].to_pylist()))
         if set(rows) < set(ids):  # unexpected layout: fall back below
             rows = None
-    except Exception:  # noqa: BLE001 — remote/exotic storage: use Spark
+    except ImportError:  # no pyarrow installed: use Spark
+        rows = None
+    except (OSError, pa.ArrowInvalid):  # remote/exotic storage: use Spark
         rows = None
     if rows is None:
         emb = load_embeddings(spark, sf_dir)

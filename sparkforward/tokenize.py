@@ -57,8 +57,10 @@ def tokenize(text: str) -> list[str]:
     return TOKEN_RE.findall(text.lower())
 
 
-#: below this many input bytes the spread is skipped: a single-task Python
-#: kernel over <4 MB of text finishes in well under a second, while the
+#: below this many input bytes the spread is skipped. The floor compares
+#: the input files' ON-DISK (compressed parquet) size, not raw text bytes:
+#: 4 MB on disk holds several times that much text, and a single-task
+#: Python kernel over it still finishes in about a second, while the
 #: round-robin exchange + per-task scheduling it would buy cost more
 #: (drift-controlled A/B, round 8: the exchange made fixture-scale BM25
 #: ~10% slower; a data-size floor, not a core-count constant)

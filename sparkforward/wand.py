@@ -1,13 +1,13 @@
 """Top-k BM25 serving over the posting index: metadata-planned I/O,
-block-max WAND, DAAT, **lazy block decoding**.
+block-max WAND, **lazy block decoding**.
 
 Per query: a metadata-only pass over the block-granular index (parquet
 column pruning — blob pages unread; memoized per term) plans which blocks
 to gather at all; the gather joins surviving blocks against a driver-known
 ``In(term, ...)`` predicate (pushed into the parquet scan — row-group
-min/max pruning on the sorted ``term`` column) plus broadcast key tables; a
-document-at-a-time WAND traversal with block-max skipping produces the
-top-k.
+min/max pruning on the sorted ``term`` column) plus broadcast key tables;
+term-at-a-time scoring (:func:`taat_query`) or a vectorized block-max WAND
+over doc-range strips (:func:`wand_query_vec`) produces the top-k.
 
 Three properties make this the 10^12-doc shape:
 
@@ -23,10 +23,9 @@ Three properties make this the 10^12-doc shape:
   workload-bounded: head terms above MAX_META_BLOCKS plan from per-shard
   aggregates with the filter pushed into Catalyst.
 * **Blocks decode lazily.** Blocks are self-contained (doc deltas restart
-  per block — postings.encode_posting_list), so ``seek`` jumps via binary
-  search over block-last metadata and only the blocks a cursor actually
-  enters are ever decompressed. Serving cost is O(blocks touched), not
-  O(df).
+  per block — postings.encode_posting_list), so the WAND kernel decodes
+  only the blocks under strips that survive pruning. Serving cost is
+  O(blocks touched), not O(df).
 
 Pruning is **lossless** at every layer: block bounds are exact BM25 upper
 bounds computed at build time, and surviving documents are re-scored from
@@ -37,8 +36,6 @@ granularity (it is the driver's oracle check for this query).
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -47,9 +44,6 @@ from pyspark.sql import types as T
 
 from sparkforward.bm25 import B, K1, SCORE_DECIMALS
 from sparkforward.postings import PostingIndex, varbyte_decode
-
-#: sentinel "no more docs in this shard" for shallow_bound's block-last slot
-_NO_DOC = 2**62
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -61,286 +55,11 @@ RESULT_SCHEMA = T.StructType(
 )
 
 
-class _ShardCursor:
-    """Lazy cursor over ONE (term, salt) shard row.
-
-    Decodes a block only when the cursor enters it; ``seek`` skips whole
-    blocks via binary search on ``block_last_doc``.
-    """
-
-    __slots__ = (
-        "idf", "avgdl", "n", "block_size",
-        "doc_blob", "tf_blob", "dl_blob",
-        "block_last", "block_max", "doc_off", "tf_off", "dl_off",
-        "n_blocks", "block_idx", "in_block",
-        "_docs", "_scores", "_decoded_block",
-        "max_score", "blocks_decoded", "block_len",
-    )
-
-    def __init__(self, row, avgdl: float, block_size: int):
-        self.idf = float(row["idf"])
-        self.avgdl = avgdl
-        self.n = int(row["n"])
-        self.block_size = block_size
-        self.doc_blob = bytes(row["doc_blob"])
-        self.tf_blob = bytes(row["tf_blob"])
-        self.dl_blob = bytes(row["dl_blob"])
-        self.block_last = np.asarray(row["block_last_doc"], dtype=np.int64)
-        self.block_max = self.idf * np.asarray(row["block_max_z"], dtype=np.float64)
-        self.doc_off = [int(x) for x in row["block_doc_off"]]
-        self.tf_off = [int(x) for x in row["block_tf_off"]]
-        self.dl_off = [int(x) for x in row["block_dl_off"]]
-        # explicit per-block lengths: present when the row is a serve-side
-        # reassembly of a PRUNED block subset (interior gaps break the
-        # uniform-block_size length rule)
-        bl = row["block_len"] if "block_len" in row else None
-        self.block_len = None if bl is None else [int(x) for x in bl]
-        self.n_blocks = len(self.block_last)
-        self.block_idx = 0
-        self.in_block = 0
-        self._docs: np.ndarray | None = None
-        self._scores: np.ndarray | None = None
-        self._decoded_block = -1
-        self.max_score = float(self.block_max.max()) if self.n_blocks else 0.0
-        self.blocks_decoded = 0
-
-    # ----------------------------- decoding ---------------------------- #
-    def _decode_block(self, b: int) -> None:
-        if self._decoded_block == b:
-            return
-        d0 = self.doc_off[b]
-        d1 = self.doc_off[b + 1] if b + 1 < self.n_blocks else len(self.doc_blob)
-        t0 = self.tf_off[b]
-        t1 = self.tf_off[b + 1] if b + 1 < self.n_blocks else len(self.tf_blob)
-        l0 = self.dl_off[b]
-        l1 = self.dl_off[b + 1] if b + 1 < self.n_blocks else len(self.dl_blob)
-        deltas = varbyte_decode(self.doc_blob[d0:d1])
-        self._docs = np.cumsum(deltas)  # first value is absolute (restart)
-        tf = varbyte_decode(self.tf_blob[t0:t1]).astype(np.float64)
-        dl = varbyte_decode(self.dl_blob[l0:l1]).astype(np.float64)
-        self._scores = self.idf * (tf * (K1 + 1.0)) / (
-            tf + K1 * (1.0 - B + B * dl / self.avgdl)
-        )
-        self._decoded_block = b
-        self.blocks_decoded += 1
-
-    # ------------------------------ cursor ----------------------------- #
-    def exhausted(self) -> bool:
-        return self.block_idx >= self.n_blocks
-
-    def current(self) -> int:
-        if self.exhausted():
-            return -1
-        self._decode_block(self.block_idx)
-        return int(self._docs[self.in_block])
-
-    def current_score(self) -> float:
-        self._decode_block(self.block_idx)
-        return float(self._scores[self.in_block])
-
-    def advance(self) -> None:
-        self.in_block += 1
-        block_len = self._block_len(self.block_idx)
-        if self.in_block >= block_len:
-            self.block_idx += 1
-            self.in_block = 0
-
-    def _block_len(self, b: int) -> int:
-        if self.block_len is not None:
-            return self.block_len[b]
-        if b == self.n_blocks - 1:
-            return self.n - b * self.block_size
-        return self.block_size
-
-    def shallow_bound(self, target: int) -> tuple[float, int]:
-        """(block max, block last doc) of the block that would contain
-        ``target`` — a *shallow* advance: metadata only, NO decode, cursor
-        position unchanged.
-
-        This is the sound block-max refinement bound for a pivot document:
-        the cursor's CURRENT block may end before the pivot
-        (``block_last < target``), in which case its maximum says nothing
-        about the pivot's block. Any occurrence of a doc in
-        ``[target, returned block_last]`` lies in exactly the returned
-        block, so its max is an exact upper bound for this shard's
-        contribution to any such doc. Returns ``(0.0, +inf-sentinel)`` when
-        the shard has no postings at or after ``target``.
-        """
-        if self.exhausted():
-            return 0.0, _NO_DOC
-        b = self.block_idx + int(
-            np.searchsorted(self.block_last[self.block_idx :], target, side="left")
-        )
-        if b >= self.n_blocks:
-            return 0.0, _NO_DOC
-        return float(self.block_max[b]), int(self.block_last[b])
-
-    def seek(self, target: int) -> None:
-        """First posting with doc >= target. Blocks whose last doc is below
-        the target are skipped WITHOUT decoding."""
-        if self.exhausted():
-            return
-        b = self.block_idx + int(
-            np.searchsorted(self.block_last[self.block_idx :], target, side="left")
-        )
-        if b >= self.n_blocks:
-            self.block_idx = self.n_blocks
-            self.in_block = 0
-            return
-        if b != self.block_idx:
-            self.block_idx = b
-            self.in_block = 0
-        self._decode_block(b)
-        self.in_block = max(
-            self.in_block,
-            int(np.searchsorted(self._docs, target, side="left")),
-        )
-        # target might exceed every doc in this block only if block_last lied
-        if self.in_block >= self._block_len(b):  # pragma: no cover (defensive)
-            self.block_idx += 1
-            self.in_block = 0
-
-
 def _keep_mask(docs: np.ndarray, dels: np.ndarray) -> np.ndarray:
     """True where ``docs`` is NOT in the sorted doc-tombstone array —
     vectorized membership against the (bounded) delete sidecar."""
     pos = np.searchsorted(dels, docs)
     return ~((pos < len(dels)) & (dels[np.minimum(pos, len(dels) - 1)] == docs))
-
-
-def wand_query(
-    term_rows: pd.DataFrame,
-    k: int,
-    avgdl: float,
-    block_size: int,
-    modulus: int = 1,
-    residue: int = 0,
-    stats_out: list | None = None,
-    init_threshold: float = -np.inf,
-    deletes: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """Block-max WAND over one query's shard rows -> [(doc_id, score)].
-
-    ``deletes``: sorted doc-tombstone array (append.delete_docs) — a
-    tombstoned pivot is stepped over without scoring, exactly like a
-    foreign serve-shard residue; stored block bounds still include deleted
-    postings, which only over-estimates (sound).
-
-    ``stats_out``: when a list is passed, ``(blocks_decoded,
-    blocks_total)`` is appended — the pruning-efficiency counters.
-
-    ``init_threshold``: a sound lower bound on this (query, shard)'s final
-    k-th best score (the block-metadata bound the block-granular serve
-    derives before gathering) — pruning starts hot instead of waiting for
-    the heap to fill.
-
-    Returns the exact top-k by (rounded score desc, doc_id asc); ``score``
-    is the float64 BM25 sum over the query's matching terms, rounded to
-    SCORE_DECIMALS — identical to the exhaustive scorer's ranking rule.
-
-    ``modulus``/``residue`` restrict the traversal to docs with
-    ``doc_id % modulus == residue`` — the doc-disjoint serve-shard filter
-    (terms stored at a coarser shard count than the query's parallelism
-    still contain foreign residues; those are skipped without scoring).
-    """
-    cursors = [
-        _ShardCursor(row, avgdl, block_size) for _, row in term_rows.iterrows()
-    ]
-    # Heap items compare (rounded score, -doc_id): ties keep the smaller
-    # doc_id. Upper bounds are raw float64; pruning uses a one-rounding-unit
-    # margin so a raw score that would round up to tie the threshold is
-    # never skipped — pruning stays lossless w.r.t. the rounded ranking.
-    eps = 10.0 ** (-SCORE_DECIMALS)
-    heap: list[tuple[float, int]] = []
-    threshold = float(init_threshold)
-
-    while True:
-        live = [c for c in cursors if not c.exhausted()]
-        if not live:
-            break
-        live.sort(key=lambda c: c.current())
-        # pivot: smallest prefix whose UB sum could still reach the threshold
-        acc = 0.0
-        pivot_idx = -1
-        for i, c in enumerate(live):
-            acc += c.max_score
-            if acc > threshold - eps:
-                pivot_idx = i
-                break
-        if pivot_idx == -1:
-            break
-        pivot_doc = live[pivot_idx].current()
-        # extend to every cursor sitting on the pivot doc (sorted ties)
-        end = pivot_idx
-        while end + 1 < len(live) and live[end + 1].current() == pivot_doc:
-            end += 1
-        # Block-max refinement with SHALLOW-ADVANCED blocks: each prefix
-        # cursor contributes the max of the block that would contain the
-        # pivot (its current block may end before the pivot, whose max would
-        # underestimate the true bound — the unsoundness fixed in round 2).
-        prefix = live[: end + 1]
-        block_ub = 0.0
-        cover_last = _NO_DOC  # bound stays valid for all docs <= cover_last
-        for c in prefix:
-            bm, bl = c.shallow_bound(pivot_doc)
-            block_ub += bm
-            if bl < cover_last:
-                cover_last = bl
-        if block_ub <= threshold - eps:
-            # BMW skip: every doc in [pivot_doc, d_next-1] is bounded by
-            # block_ub (prefix shallow blocks cover through cover_last, and
-            # no cursor beyond the prefix holds a doc before its current),
-            # so jump the whole prefix past that range in one seek each.
-            d_next = max(pivot_doc, cover_last) + 1
-            if end + 1 < len(live):
-                d_next = min(d_next, max(pivot_doc + 1, live[end + 1].current()))
-            for c in prefix:
-                if not c.exhausted() and c.current() < d_next:
-                    c.seek(d_next)
-            continue
-        if live[0].current() == pivot_doc:
-            skip = modulus > 1 and pivot_doc % modulus != residue
-            if not skip and deletes is not None and len(deletes):
-                i = int(np.searchsorted(deletes, pivot_doc))
-                skip = i < len(deletes) and int(deletes[i]) == pivot_doc
-            if skip:
-                # foreign serve-shard residue or tombstoned doc: step over
-                # without scoring
-                for c in live:
-                    if c.current() == pivot_doc:
-                        c.advance()
-                    elif c.current() > pivot_doc:
-                        break
-                continue
-            # aligned: fully score the pivot document
-            score = 0.0
-            for c in live:
-                if c.current() == pivot_doc:
-                    score += c.current_score()
-                    c.advance()
-                elif c.current() > pivot_doc:
-                    break
-            item = (round(score, SCORE_DECIMALS), -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-                if len(heap) == k:
-                    threshold = max(heap[0][0], init_threshold)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-                threshold = max(heap[0][0], init_threshold)
-        else:
-            for c in live[:pivot_idx]:
-                if c.current() < pivot_doc:
-                    c.seek(pivot_doc)
-    if stats_out is not None:
-        stats_out.append(
-            (
-                sum(c.blocks_decoded for c in cursors),
-                sum(c.n_blocks for c in cursors),
-            )
-        )
-    out = sorted(heap, key=lambda t: (-t[0], -t[1]))
-    return [(-d, s) for s, d in out]
 
 
 def _rmq_levels(a: np.ndarray) -> list[np.ndarray]:
@@ -489,11 +208,25 @@ def wand_query_vec(
     filter; strip/block bounds keep the deleted postings' contributions,
     which only over-estimates (sound pruning, exact scores).
 
-    Same contract as :func:`wand_query` (exact top-k by rounded score
-    desc, doc asc; lossless block-max pruning with the one-rounding-unit
-    margin; ``init_threshold`` seeds the pruning threshold) but with NO
-    per-posting Python loop — the unit of work is a doc-range STRIP, and
-    everything inside a strip batch is NumPy:
+    ``stats_out``: when a list is passed, ``(blocks_decoded,
+    blocks_total)`` is appended — the pruning-efficiency counters.
+
+    ``init_threshold``: a sound lower bound on this (query, shard)'s final
+    k-th best score (the block-metadata bound the block-granular serve
+    derives before gathering) — pruning starts hot instead of waiting for
+    the top-k to fill.
+
+    ``modulus``/``residue`` restrict scoring to docs with
+    ``doc_id % modulus == residue`` — the doc-disjoint serve-shard filter
+    (terms stored at a coarser shard count than the query's parallelism
+    still contain foreign residues; those are masked out without scoring).
+
+    Returns the exact top-k by (rounded score desc, doc_id asc); ``score``
+    is the float64 BM25 sum over the query's matching terms, rounded to
+    SCORE_DECIMALS — identical to the exhaustive scorer's ranking rule.
+    Pruning is lossless block-max WAND with a one-rounding-unit margin,
+    with NO per-posting Python loop — the unit of work is a doc-range
+    STRIP, and everything inside a strip batch is NumPy:
 
     * **Strip grid.** Strip boundaries are the union of every cursor's
       block-last docs, so each strip intersects AT MOST ONE block per
@@ -524,7 +257,7 @@ def wand_query_vec(
       at visit time; thresholds only grow, so every skipped doc provably
       ranks below k fully-scored docs at the rounded granularity — the
       identical margin rule (and hence bit-identical results, tested) as
-      the per-posting kernel and the exhaustive scorer.
+      the exhaustive scorer.
     """
     eps = 10.0 ** (-SCORE_DECIMALS)
     cursors = [
@@ -656,7 +389,7 @@ def taat_query(
     Decodes every shard, accumulates per-doc sums with
     ``np.add.reduceat`` over the doc-sorted concatenation, ranks by
     (rounded score desc, doc asc) — the exact rule the oracle uses.
-    ``modulus``/``residue``: serve-shard residue filter (see wand_query).
+    ``modulus``/``residue``: serve-shard residue filter (see wand_query_vec).
     """
     from sparkforward.postings import decode_blocked_posting_list
 

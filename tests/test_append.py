@@ -129,109 +129,8 @@ def test_append_empty_delta_is_noop(spark, docs, tmp_path):
     assert index_signature(str(tmp_path / "a")) == before
 
 
-def test_segment_append_serves_like_scratch(spark, docs, tmp_path):
-    """LSM segment mode: untouched base rows stay on disk unrewritten; the
-    composed stack serves EXACTLY like a scratch union build (stale block
-    bounds are ratio-adjusted at load — sound pruning, exact scores)."""
-    base = docs.filter(F.col("doc_id") < 400)
-    _build(base, tmp_path / "a")
-    base_files = sorted(
-        p.name for p in (tmp_path / "a" / "postings").rglob("*.parquet")
-    )
-    idx = append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 400),
-        num_partitions=4, mode="segment",
-    )
-    scratch = _build(docs, tmp_path / "b")
-
-    # base data untouched on disk — the whole point of segment mode
-    assert sorted(
-        p.name for p in (tmp_path / "a" / "postings").rglob("*.parquet")
-    ) == base_files
-    with open(tmp_path / "a" / "stats.json") as fh:
-        st = json.load(fh)
-    assert len(st["segments"]) == 2 and st["data_dir"] == "gen-1"
-
-    # default dispatch AND forced-WAND (pruning path under adjusted stale
-    # bounds) both == scratch
-    assert _serve(spark, idx).equals(_serve(spark, scratch))
-    assert _serve(spark, idx, taat_max_postings=0).equals(
-        _serve(spark, scratch, taat_max_postings=0)
-    )
-
-
-def test_segment_append_twice_then_compact_matches_scratch(spark, docs, tmp_path):
-    """Two stacked segments (head terms touched twice — the second append
-    re-merges rows the FIRST append produced) serve like scratch, and
-    compaction folds the stack into a generation byte-identical to a
-    scratch union build."""
-    _build(docs.filter(F.col("doc_id") < 300), tmp_path / "a")
-    append_to_index(
-        spark, str(tmp_path / "a"),
-        docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 420)),
-        num_partitions=4, mode="segment",
-    )
-    idx = append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 420),
-        num_partitions=4, mode="segment",
-    )
-    scratch = _build(docs, tmp_path / "b")
-    assert _serve(spark, idx).equals(_serve(spark, scratch))
-
-    compact_index(spark, str(tmp_path / "a"))
-    assert index_signature(str(tmp_path / "a")) == index_signature(str(tmp_path / "b"))
-    with open(tmp_path / "a" / "stats.json") as fh:
-        st = json.load(fh)
-    assert "segments" not in st and st["data_dir"] == "gen-3"
-    # superseded segment data is gone; exactly one generation remains
-    assert not (tmp_path / "a" / "gen-1").exists()
-    assert not (tmp_path / "a" / "gen-2").exists()
-    assert not (tmp_path / "a" / "postings").exists()
-
-
-def test_segment_auto_compaction(spark, docs, tmp_path):
-    """max_segments folds the stack once it grows past the cadence."""
-    _build(docs.filter(F.col("doc_id") < 300), tmp_path / "a")
-    append_to_index(
-        spark, str(tmp_path / "a"),
-        docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 420)),
-        num_partitions=4, mode="segment", max_segments=2,
-    )
-    with open(tmp_path / "a" / "stats.json") as fh:
-        assert len(json.load(fh)["segments"]) == 2  # under cadence: kept
-    append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 420),
-        num_partitions=4, mode="segment", max_segments=2,
-    )
-    with open(tmp_path / "a" / "stats.json") as fh:
-        assert "segments" not in json.load(fh)  # compacted
-    _build(docs, tmp_path / "b")
-    assert index_signature(str(tmp_path / "a")) == index_signature(str(tmp_path / "b"))
-
-
-def test_rewrite_append_on_segmented_base(spark, docs, tmp_path):
-    """A rewrite-mode append composes a segmented base and lands a single
-    byte-identical generation (doubles as compaction-with-delta)."""
-    _build(docs.filter(F.col("doc_id") < 300), tmp_path / "a")
-    append_to_index(
-        spark, str(tmp_path / "a"),
-        docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 420)),
-        num_partitions=4, mode="segment",
-    )
-    append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 420),
-        num_partitions=4, mode="rewrite",
-    )
-    _build(docs, tmp_path / "b")
-    assert index_signature(str(tmp_path / "a")) == index_signature(str(tmp_path / "b"))
-    with open(tmp_path / "a" / "stats.json") as fh:
-        assert "segments" not in json.load(fh)
-    assert not (tmp_path / "a" / "gen-1").exists()
-    assert not (tmp_path / "a" / "postings").exists()
-
-
-def test_segment_stack_serve_fuzz_equals_exhaustive(spark, tmp_path):
-    """Seeded end-to-end fuzz over a 3-deep segment stack: random corpora
+def test_lsm_stack_serve_fuzz_equals_exhaustive(spark, tmp_path):
+    """Seeded end-to-end fuzz over a 3-deep lsm stack: random corpora
     split at random id cuts, with deltas of very different doc lengths so
     the union avgdl swings BOTH ways across appends (stale segments' bound
     adjustment gets exercised in both the inflate and deflate direction).
@@ -252,48 +151,46 @@ def test_segment_stack_serve_fuzz_equals_exhaustive(spark, tmp_path):
         out["rank"] = out["rank"].astype("int64")
         return out.sort_values(["q_id", "rank"]).reset_index(drop=True)
 
-    # one seed per stack flavor keeps runtime flat while fuzzing both the
-    # term-granular (tombstone + ratio-bound) and the Lucene-style lsm
-    # (cross-segment concatenation + additive dictionary) compose paths
-    for seed, mode in ((11, "segment"), (47, "lsm")):
-        rng = np.random.default_rng(seed)
+    # one seed keeps runtime flat while fuzzing the lsm compose path
+    # (cross-segment concatenation, additive dictionary, ratio bounds)
+    rng = np.random.default_rng(47)
 
-        def mk(lo, hi, len_lo, len_hi):
-            return [
-                (int(i),
-                 " ".join(rng.choice(words, size=int(rng.integers(len_lo, len_hi)))))
-                for i in range(lo, hi)
-            ]
-
-        c1 = int(rng.integers(40, 70))
-        c2 = int(rng.integers(80, 110))
-        # long base docs, short first delta (avgdl drops), long second
-        # delta (avgdl rises again)
-        rows = mk(0, c1, 20, 40) + mk(c1, c2, 3, 8) + mk(c2, 130, 30, 60)
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        d = F.col("doc_id")
-        path = str(tmp_path / f"s{seed}")
-        build_inverted_index(docs.filter(d < c1).repartition(3), path, **cfg)
-        append_to_index(
-            spark, path, docs.filter((d >= c1) & (d < c2)),
-            num_partitions=3, mode=mode,
-        )
-        idx = append_to_index(
-            spark, path, docs.filter(d >= c2), num_partitions=3, mode=mode
-        )
-        queries = [
-            (f"q{j}", " ".join(rng.choice(words, size=int(rng.integers(1, 4)))))
-            for j in range(5)
+    def mk(lo, hi, len_lo, len_hi):
+        return [
+            (int(i),
+             " ".join(rng.choice(words, size=int(rng.integers(len_lo, len_hi)))))
+            for i in range(lo, hi)
         ]
-        qdf = spark.createDataFrame(queries, "q_id string, query string")
-        expected = norm(bm25_topk(docs, qdf, k=7))
-        for budget in (None, 3, 0):
-            served = norm(wand_topk(idx, qdf, k=7, max_meta_blocks=budget))
-            pd.testing.assert_frame_equal(served, expected), (seed, budget)
-        served_w = norm(
-            wand_topk(idx, qdf, k=7, taat_max_postings=0, max_meta_blocks=3)
-        )
-        pd.testing.assert_frame_equal(served_w, expected), seed
+
+    c1 = int(rng.integers(40, 70))
+    c2 = int(rng.integers(80, 110))
+    # long base docs, short first delta (avgdl drops), long second
+    # delta (avgdl rises again)
+    rows = mk(0, c1, 20, 40) + mk(c1, c2, 3, 8) + mk(c2, 130, 30, 60)
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    d = F.col("doc_id")
+    path = str(tmp_path / "s")
+    build_inverted_index(docs.filter(d < c1).repartition(3), path, **cfg)
+    append_to_index(
+        spark, path, docs.filter((d >= c1) & (d < c2)),
+        num_partitions=3, mode="lsm",
+    )
+    idx = append_to_index(
+        spark, path, docs.filter(d >= c2), num_partitions=3, mode="lsm"
+    )
+    queries = [
+        (f"q{j}", " ".join(rng.choice(words, size=int(rng.integers(1, 4)))))
+        for j in range(5)
+    ]
+    qdf = spark.createDataFrame(queries, "q_id string, query string")
+    expected = norm(bm25_topk(docs, qdf, k=7))
+    for budget in (None, 3, 0):
+        served = norm(wand_topk(idx, qdf, k=7, max_meta_blocks=budget))
+        pd.testing.assert_frame_equal(served, expected), budget
+    served_w = norm(
+        wand_topk(idx, qdf, k=7, taat_max_postings=0, max_meta_blocks=3)
+    )
+    pd.testing.assert_frame_equal(served_w, expected)
 
 
 def test_append_rejects_duplicate_ids_within_delta(spark, docs, tmp_path):
@@ -337,7 +234,7 @@ def test_lsm_append_serves_like_scratch(spark, docs, tmp_path):
     ) == base_term_files
     with open(tmp_path / "a" / "stats.json") as fh:
         st = json.load(fh)
-    assert st["terms_layout"] == "additive"
+    assert "terms_layout" not in st
     assert len(st["segments"]) == 2
     assert st["segments"][1]["kind"] == "lsm"
     # the reshard regime really ran: the manifest counts re-merged terms
@@ -435,24 +332,8 @@ def test_lsm_auto_compaction(spark, docs, tmp_path):
     assert index_signature(str(tmp_path / "a")) == index_signature(str(tmp_path / "b"))
 
 
-def test_segment_mode_rejected_on_lsm_base(spark, docs, tmp_path):
-    """Term-granular segment appends can't stack on an additive lsm base
-    (one-shard-one-segment + union-dictionary invariants don't hold)."""
-    _build(docs.filter(F.col("doc_id") < 300), tmp_path / "a")
-    append_to_index(
-        spark, str(tmp_path / "a"),
-        docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 420)),
-        num_partitions=4, mode="lsm",
-    )
-    with pytest.raises(ValueError, match="lsm index"):
-        append_to_index(
-            spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 420),
-            num_partitions=4, mode="segment",
-        )
-
-
 def test_rewrite_append_on_lsm_base(spark, docs, tmp_path):
-    """A rewrite-mode append on an additive base re-merges EVERY visible
+    """A rewrite-mode append on an lsm stack re-merges EVERY visible
     row (block numbers collide across segments, so the map-only metadata
     refresh is unsound there) and lands a single byte-identical
     generation with the full union dictionary."""
@@ -471,6 +352,40 @@ def test_rewrite_append_on_lsm_base(spark, docs, tmp_path):
     with open(tmp_path / "a" / "stats.json") as fh:
         st = json.load(fh)
     assert "segments" not in st and "terms_layout" not in st
+
+
+def test_legacy_term_granular_stack_loads_and_compacts(spark, docs, tmp_path):
+    """Older indexes may hold a term-granular stack: a segment without
+    ``kind`` whose terms table is the full union and whose tombstones hide
+    every re-merged term's rows in older segments. Such a stack still
+    serves like scratch and compacts byte-identically."""
+    import shutil
+
+    _build(docs.filter(F.col("doc_id") < 400), tmp_path / "a")
+    scratch = _build(docs, tmp_path / "b")
+    # the segment a term-granular append wrote when its delta touched
+    # every term: the union's rows, tombstoning all of them in the base
+    seg = tmp_path / "a" / "gen-1"
+    shutil.copytree(tmp_path / "b" / "postings", seg / "postings")
+    shutil.copytree(tmp_path / "b" / "terms", seg / "terms")
+    scratch.terms.select("term").write.parquet(str(seg / "tombstones"))
+    base = json.loads((tmp_path / "a" / "stats.json").read_text())
+    union = json.loads((tmp_path / "b" / "stats.json").read_text())
+    (tmp_path / "a" / "stats.json").write_text(json.dumps({
+        **base,
+        **{k: union[k] for k in ("n_docs", "avgdl", "sum_dl", "head")},
+        "data_dir": "gen-1",
+        "segments": [
+            {"dir": "", "avgdl": base["avgdl"], "tombstones": None},
+            {"dir": "gen-1", "avgdl": union["avgdl"],
+             "tombstones": "gen-1/tombstones"},
+        ],
+    }))
+
+    idx = PostingIndex.load(spark, str(tmp_path / "a"))
+    assert _serve(spark, idx).equals(_serve(spark, scratch))
+    compact_index(spark, str(tmp_path / "a"))
+    assert index_signature(str(tmp_path / "a")) == index_signature(str(tmp_path / "b"))
 
 
 def test_orphaned_generation_is_wiped_and_retry_succeeds(spark, docs, tmp_path):
@@ -513,6 +428,13 @@ def test_extra_stats_rejects_engine_owned_keys(spark, tmp_path):
             spark, path, docs.filter(d >= 400), num_partitions=4,
             extra_stats={"n_docs": 0},
         )
+    # the retired term-granular mode is an unknown mode like any other
+    for mode in ("segment", "bogus"):
+        with pytest.raises(ValueError, match="unknown mode"):
+            append_to_index(
+                spark, path, docs.filter(d >= 400), num_partitions=4,
+                mode=mode,
+            )
     # caller-owned metadata commits fine
     append_to_index(
         spark, path, docs.filter(d >= 400), num_partitions=4,

@@ -186,6 +186,22 @@ def test_wand_index_cache_builds_once_and_release_removes_dir(spark):
     assert not os.path.exists(path)
 
 
+def test_collect_qvecs_raises_unexpected_fast_path_errors(spark, monkeypatch):
+    """The local pyarrow read of query vectors falls back to a Spark
+    scan only for the failures it expects (no pyarrow, unreadable path,
+    invalid Arrow data); a type error is a bug and must surface."""
+    import pyarrow.parquet as pq
+
+    from sparkforward import queries
+
+    def broken(*_a, **_k):
+        raise TypeError("schema mismatch")
+
+    monkeypatch.setattr(pq, "read_table", broken)
+    with pytest.raises(TypeError, match="schema mismatch"):
+        queries._collect_qvecs(spark, SF_DIR, {"qvec-probe": 0})
+
+
 def test_caches_auto_expire_across_real_session_stop(tmp_path):
     """Integration: populate both engine caches, stop the session, start a
     new one — the caches are empty and the new context has nothing

@@ -81,17 +81,20 @@ def test_spread_sits_at_python_boundaries_only(spark, monkeypatch):
     bm25._TF_CACHE.release()
     # above the floor, the exchange feeds exactly the Python kernels
     monkeypatch.setattr(tokenize, "SPREAD_MIN_BYTES", 0)
-    for df in (
-        bm25._tf_persisted(docs, "doc_id", "text"),
-        repetition_stats(docs),
-        simhash(docs),
-    ):
-        plan = _plan(df)
-        i_ex = plan.find("RoundRobinPartitioning")
-        i_py = plan.find("MapInPandas")
-        assert 0 <= i_py < i_ex, plan[:400]  # exchange feeds the kernel
-    assert "Exchange" not in _plan(token_counts(docs))
-    bm25._TF_CACHE.release()
+    try:
+        for df in (
+            bm25._tf_persisted(docs, "doc_id", "text"),
+            repetition_stats(docs),
+            simhash(docs),
+        ):
+            plan = _plan(df)
+            i_ex = plan.find("RoundRobinPartitioning")
+            i_py = plan.find("MapInPandas")
+            assert 0 <= i_py < i_ex, plan[:400]  # exchange feeds the kernel
+        assert "Exchange" not in _plan(token_counts(docs))
+    finally:
+        # a frame built under the patched floor must never outlive the test
+        bm25._TF_CACHE.release()
 
 
 def test_bm25_scan_is_pruned(spark):

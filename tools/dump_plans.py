@@ -42,6 +42,9 @@ def main() -> None:
             txt = explain_str(df)
         except Exception as e:  # noqa: BLE001 — record the failure, keep going
             txt = f"EXPLAIN FAILED: {e!r}"
+        # plans can embed literal NUL bytes (e.g. binary constants); escape
+        # them so the dumps stay plain text to git and grep
+        txt = txt.replace("\x00", "\\x00")
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(txt + "\n")
         print(f"dumped {name}", file=sys.stderr)
