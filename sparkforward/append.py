@@ -114,6 +114,7 @@ from sparkforward.postings import (
     salt_partials,
     varbyte_decode,
 )
+from sparkforward.session import local_frame
 
 _BLOCK_COLS = [f.name for f in BLOCK_POSTING_SCHEMA.fields]
 
@@ -437,9 +438,7 @@ def append_to_index(
             if resharded:
                 base_input = base_post.join(
                     F.broadcast(
-                        spark.createDataFrame(
-                            [(t,) for t in resharded], "term string"
-                        )
+                        local_frame(spark, [(t,) for t in resharded], "term string")
                     ),
                     "term",
                     "left_semi",
@@ -486,9 +485,9 @@ def append_to_index(
             _write_postings(touched_rows, gen_dir, n_buckets)
             # term tombstones hide the resharded terms' stale rows in every
             # OLDER segment (everything else concatenates) — a short list
-            spark.createDataFrame(
-                [(t,) for t in resharded], "term string"
-            ).write.mode("overwrite").parquet(
+            local_frame(spark, [(t,) for t in resharded], "term string").write.mode(
+                "overwrite"
+            ).parquet(
                 os.path.join(gen_dir, "tombstones")
             )
             # additive dictionary: the DELTA's (term, df) only — summed and
@@ -745,8 +744,8 @@ def delete_docs(
             "overwrite"
         ).parquet(os.path.join(gen_dir, "terms"))
         all_dels = np.union1d(old_dels, new_ids)
-        spark.createDataFrame(
-            [(int(x),) for x in all_dels], "doc_id long"
+        local_frame(
+            spark, [(int(x),) for x in all_dels], "doc_id long"
         ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(gen_dir, "deletes")
         )

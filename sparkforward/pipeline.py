@@ -48,17 +48,27 @@ def ff_score_transform(
     mode: Mode | None = None,
 ) -> DataFrame:
     """FFScore.transform (ref pyterrier.py:26-48): replace ``score`` with the
-    dense score, keep the sparse score as ``score_0``, re-rank per query."""
-    from sparkforward.score import ff_score
+    dense score, keep the sparse score as ``score_0``, re-rank per query.
 
-    internal = _to_internal(run)
+    One pass over ``run``: ``score_0`` (as given, uncast) and ``query``
+    ride through the dense aggregation instead of a join back to ``run``.
+    """
+    from sparkforward.score import _dense_pass, _query_vectors_df
+
+    internal = _to_internal(run).dropna(subset=["q_id", "id", "score"])
     ranking = Ranking(internal)
-    scored = ff_score(
-        ranking, index, encoder=encoder, query_vectors=query_vectors, mode=mode,
-        check_missing=False,
+    qvec_df = _query_vectors_df(
+        internal.sparkSession, ranking, encoder, query_vectors
     )
-    sparse = internal.select("q_id", "id", F.col("score").alias("score_0"))
-    out = scored.df.join(sparse, ["q_id", "id"])
+    cand = internal.select(
+        F.col("q_id").cast("string").alias("q_id"),
+        F.col("id").cast("string").alias("id"),
+        F.col("score").alias("score_0"),
+        *(["query"] if ranking.has_queries else []),
+    )
+    out = _dense_pass(cand, index, qvec_df, mode or index.mode).withColumnRenamed(
+        "ff_score", "score"
+    )
     return _to_pyterrier(add_ranks(out).withColumn("rank", F.col("rank") - 1))
 
 

@@ -72,15 +72,15 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries_df(spark: SparkSession, subset: list[str] | None = None) -> DataFrame:
-    """Fixed-query-set local relation, memoized per (session, subset) —
-    repeated entries otherwise pay a fresh createDataFrame conversion each
-    call (a few hundred ms of py4j per query at fixture scale)."""
+    """The fixed query set as a local relation (:func:`local_frame`: a
+    ``LocalRelation`` read in-process, no scan job), memoized per
+    (session, subset) so repeated entries share one frame."""
     key = (tuple(subset) if subset is not None else None,)
     hit = _QUERIES_DF_CACHE.get(spark, key)
     if hit is not None:
         return hit
     rows = [(q, t) for q, t in QUERY_SET if subset is None or q in subset]
-    df = spark.createDataFrame(rows, "q_id string, query string")
+    df = local_frame(spark, rows, "q_id string, query string")
     _QUERIES_DF_CACHE.put(spark, key, df)
     return df
 
@@ -143,7 +143,7 @@ def _bm25_ctes(subset: list[str] | None = None, source: str = "documents") -> st
 #: retrieval run — so the engine materializes it once per corpus+session
 #: instead of re-deriving it per downstream operator. Entries auto-expire
 #: when their session stops (SessionScopedCache sweeps on access).
-from sparkforward.session import SessionScopedCache, is_alive  # noqa: E402
+from sparkforward.session import SessionScopedCache, is_alive, local_frame  # noqa: E402
 
 _RANKED_CACHE = SessionScopedCache()
 #: (session, subset) -> fixed-query-set local relation (see queries_df)
@@ -251,7 +251,7 @@ def _dense_scores(
     spark: SparkSession, sf_dir: str, candidates: DataFrame,
     qvec_map: dict[str, int] | None = None,
 ) -> DataFrame:
-    """(q_id, doc_id, dense) = round(dot(qvec, emb[doc_id]), 4) for candidates."""
+    """``candidates``' columns plus dense = round(dot(qvec, emb[doc_id]), 4)."""
     from sparkforward.score import dot_expr
 
     emb = load_embeddings(spark, sf_dir)
@@ -260,8 +260,7 @@ def _dense_scores(
         candidates.join(emb, candidates.doc_id == emb.vec_id)
         .join(F.broadcast(qvecs), "q_id")
         .select(
-            "q_id",
-            "doc_id",
+            *candidates.columns,
             F.round(dot_expr("q_vector", "embedding"), SCORE_DECIMALS).alias("dense"),
         )
     )
@@ -338,7 +337,7 @@ def q_bm25_wand_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (previously bench/pytest-guarded only)."""
     from sparkforward.wand import wand_topk
 
-    qdf = spark.createDataFrame(BATCH_QUERY_SET, "q_id string, query string")
+    qdf = local_frame(spark, BATCH_QUERY_SET, "q_id string, query string")
     return wand_topk(_wand_index(spark, sf_dir), qdf, k=K_FINAL)
 
 
@@ -520,7 +519,8 @@ def q_interpolate_from_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 (its own oracle gate), this entry shares interpolate_rerank's SQL
     oracle — hash-matching it proves the two engines compose end-to-end.
     The index is shared with ``q_bm25_wand_topk`` via the session cache —
-    one build serves both entries.
+    one build serves both entries. The dense score is computed on the one
+    candidate frame, so the WAND serve runs once per action.
     """
     from sparkforward.wand import wand_topk
 
@@ -528,12 +528,7 @@ def q_interpolate_from_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = wand_topk(index, queries_df(spark), k=K_CAND).select(
         "q_id", F.col("id").cast("bigint").alias("doc_id"), "score"
     )
-    dense = _dense_scores(spark, sf_dir, cand.select("q_id", "doc_id"))
-    # dense is bounded by construction (<= K_CAND rows/query) but derived,
-    # so the planner cannot estimate it: without the hint this join planned
-    # as the pipeline's only SortMergeJoin (2 exchanges + 2 sorts on the
-    # serve path; guide §3.1 — pick the strategy deliberately)
-    final = cand.join(F.broadcast(dense), ["q_id", "doc_id"]).withColumn(
+    final = _dense_scores(spark, sf_dir, cand).withColumn(
         "score_int",
         F.round(
             F.lit(ALPHA) * F.col("score") + F.lit(1.0 - ALPHA) * F.col("dense"),
@@ -1331,7 +1326,7 @@ def q_bm25_rm3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Anserini/PyTerrier first-stage stack ships, over the native engine."""
     from sparkforward.bm25 import bm25_rm3_topk
 
-    qdf = spark.createDataFrame(QUERY_SET, "q_id string, query string")
+    qdf = local_frame(spark, QUERY_SET, "q_id string, query string")
     return bm25_rm3_topk(
         load_documents(spark, sf_dir), qdf,
         k=10, k_fb=RM3_K_FB, n_exp=RM3_N_EXP, exp_weight=RM3_WEIGHT,
@@ -1429,9 +1424,7 @@ def q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         quant = _fitted_pq(sf_dir, X=_pq_fit_matrix(spark, sf_dir))
     emb = load_embeddings(spark, sf_dir)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, MODE_QVEC_ID.items(), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -1560,9 +1553,7 @@ def q_similarity_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _IVFPQ_DIR_CACHE.put(spark, (sf_dir,), d)
     index = load_ivfpq_index(spark, d)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, MODE_QVEC_ID.items(), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -1613,9 +1604,7 @@ def q_similarity_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_ivfpq_index(spark, d, emb.filter(F.col("vec_id") >= cut))
         _IVFPQ_DIR_CACHE.put(spark, ("appended", sf_dir), d)
     index = load_ivfpq_index(spark, d)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, MODE_QVEC_ID.items(), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -1915,9 +1904,7 @@ def q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkforward.similarity import lsh_topk_deterministic
 
     emb = load_embeddings(spark, sf_dir)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, MODE_QVEC_ID.items(), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -1971,9 +1958,7 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkforward.similarity import ivf_topk
 
     emb = load_embeddings(spark, sf_dir)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, MODE_QVEC_ID.items(), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -1992,9 +1977,7 @@ def q_similarity_ivf_kernel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkforward.similarity import ivf_topk
 
     emb = load_embeddings(spark, sf_dir)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, MODE_QVEC_ID.items(), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -2563,14 +2546,15 @@ def _collect_qvecs(spark, sf_dir, mapping) -> dict[str, list[float]]:
 
 
 def _local_qvec_df(spark, sf_dir, mapping) -> DataFrame:
-    """(q_id, q_vector:array<float>) as a LOCAL relation from the memoized
-    qvec collect — broadcasting it launches no job, unlike the old
-    qmap ⋈ embeddings subtree that re-scanned the embeddings table inside
-    every dense entry's plan. float32 values round-trip exactly through
-    the driver, so downstream dot products are bit-identical."""
+    """(q_id, q_vector:array<float>) from the memoized qvec collect, as a
+    :func:`local_frame`. Its rows already sit in the ``LocalRelation``, so
+    broadcasting it launches no job, unlike the old qmap ⋈ embeddings
+    subtree that re-scanned the embeddings table inside every dense
+    entry's plan. float32 values round-trip exactly through the driver,
+    so downstream dot products are bit-identical."""
     qv = _collect_qvecs(spark, sf_dir, mapping)
-    return spark.createDataFrame(
-        [(q, [float(x) for x in v]) for q, v in qv.items()],
+    return local_frame(
+        spark, [(q, [float(x) for x in v]) for q, v in qv.items()],
         "q_id string, q_vector array<float>",
     )
 

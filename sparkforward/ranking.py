@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkforward.session import local_frame
+
 if TYPE_CHECKING:
     from pathlib import Path
 
@@ -141,9 +143,9 @@ class Ranking:
         """Broadcast-join queries; raise if incomplete. Ref: ranking.py:16-28."""
         df = self._df.drop("query") if "query" in self._df.columns else self._df
         if isinstance(queries, Mapping):
-            spark = SparkSession.getActiveSession()
-            qdf = spark.createDataFrame(
-                list(queries.items()),
+            qdf = local_frame(
+                SparkSession.getActiveSession(),
+                queries.items(),
                 T.StructType(
                     [
                         T.StructField("q_id", T.StringType()),
@@ -220,8 +222,11 @@ class Ranking:
         """``alpha * self.score + (1 - alpha) * other.score``; missing -> 0.
 
         The reference's signature operator (ranking.py:293-326). One full
-        outer shuffle join on (q_id, id); with both sides pre-partitioned by
-        q_id (as our BM25/FF outputs are) Catalyst reuses the exchange.
+        outer join on (q_id, id), which shuffles each side into its own
+        exchange: both input plans run in full, even when ``other`` was
+        derived from ``self``. To re-rank a ranking by its own dense
+        scores, :func:`sparkforward.score.interpolated_rerank` reads the
+        first stage once.
         """
         d1 = minmax_normalize(self._df) if normalize else self._df
         d2 = minmax_normalize(other._df) if normalize else other._df
@@ -315,7 +320,7 @@ class Ranking:
                 T.StructField("score", T.FloatType()),
             ]
         )
-        return cls(spark.createDataFrame(rows, schema), name=name, queries=queries)
+        return cls(local_frame(spark, rows, schema), name=name, queries=queries)
 
     def to_ir_measures(self) -> DataFrame:
         """Project to ir-measures column names. Ref: util/__init__.py:29-37."""

@@ -12,7 +12,9 @@ Reference semantics re-expressed as one lazy DataFrame DAG
 4. mode aggregation ``groupBy(q_id, id).agg(max|avg|first)``
    (``index/base.py:306-312``),
 5. score-column replacement (``index/base.py:461``): the output Ranking's
-   score IS the dense score; interpolation stays a separate explicit step.
+   score IS the dense score. :func:`interpolated_rerank` instead projects
+   the interpolated score inside the same pass, so the first stage is
+   read once.
 
 Missing IDs raise ``IndexError`` like the reference (``index/util.py:38-39``)
 via a cheap left-anti-join probe (optional at scale).
@@ -33,6 +35,7 @@ from pyspark.sql import types as T
 
 from sparkforward.index import Mode, VectorIndex
 from sparkforward.ranking import Ranking, add_ranks
+from sparkforward.session import local_frame
 
 
 def dot_expr(a, b):
@@ -75,7 +78,7 @@ def _query_vectors_df(
                     T.StructField("q_vector", T.ArrayType(T.FloatType())),
                 ]
             )
-            return spark.createDataFrame(rows, schema)
+            return local_frame(spark, rows, schema)
         return query_vectors.select("q_id", "q_vector")
     if encoder is None:
         raise ValueError("Either an encoder or precomputed query_vectors is required.")
@@ -97,7 +100,7 @@ def _query_vectors_df(
             T.StructField("q_vector", T.ArrayType(T.FloatType())),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _check_missing_ids(candidates: DataFrame, id_vectors: DataFrame) -> None:
@@ -113,6 +116,46 @@ def _check_missing_ids(candidates: DataFrame, id_vectors: DataFrame) -> None:
         raise IndexError(f"ID {missing[0]['id']} not found in the index.")
 
 
+def _mode_agg(mode: Mode, col):
+    """A doc's score from its passage scores (ref index/base.py:306-312)."""
+    if mode == Mode.MAXP:
+        return F.max(col)
+    if mode == Mode.AVEP:
+        return F.avg(col)
+    # FIRSTP / PASSAGE: exactly one vector per id after the view filter
+    return F.first(col)
+
+
+def _dense_pass(
+    cand: DataFrame,
+    index: VectorIndex,
+    qvec_df: DataFrame,
+    mode: Mode,
+    how: str = "inner",
+) -> DataFrame:
+    """``cand``'s columns (``q_id``, ``id`` and any carried along) plus the
+    float dense score ``ff_score``, in one pass over ``cand``.
+
+    The gather-join keys on the mode's lookup ID; MAXP/AVEP fan out to all
+    passages of a doc, FIRSTP to the first-inserted one, PASSAGE to the
+    unique passage vector (ref index/util.py:30-36). Grouping by every
+    candidate column folds the fan-out back to one row per candidate and
+    keeps the carried columns, so no join back to ``cand`` is needed.
+    ``how="left"`` keeps candidates without a vector or query vector, with
+    a null ``ff_score``.
+    """
+    return (
+        cand.join(index.vectors_for_mode(mode), "id", how)
+        .join(F.broadcast(qvec_df), "q_id", how)
+        .groupBy(*cand.columns)
+        .agg(
+            _mode_agg(mode, dot_expr("q_vector", "vector"))
+            .cast("float")
+            .alias("ff_score")
+        )
+    )
+
+
 def compute_scores(
     candidates: DataFrame,
     index: VectorIndex,
@@ -123,34 +166,18 @@ def compute_scores(
 ) -> DataFrame:
     """(q_id, id, ff_score) for every candidate pair.
 
-    The gather-join keys on the mode's lookup ID; MAXP/AVEP fan out to all
-    passages of a doc, FIRSTP to the first-inserted one, PASSAGE to the
-    unique passage vector (ref index/util.py:30-36, base.py:306-312).
-
     ``broadcast_candidates``: hint for callers whose candidate set is known
     tiny relative to the index (early-stopping depth slices) — turns the
     gather into a map-side join over the vector scan instead of shuffling
     the vector table by id.
     """
     mode = mode or index.mode
-    id_vectors = index.vectors_for_mode(mode)
     if check_missing:
-        _check_missing_ids(candidates, id_vectors)
+        _check_missing_ids(candidates, index.vectors_for_mode(mode))
     cand = candidates.select("q_id", "id")
     if broadcast_candidates:
         cand = F.broadcast(cand)
-    joined = (
-        cand.join(id_vectors, "id")
-        .join(F.broadcast(qvec_df), "q_id")
-        .withColumn("_dot", dot_expr("q_vector", "vector"))
-    )
-    if mode == Mode.MAXP:
-        agg = F.max("_dot")
-    elif mode == Mode.AVEP:
-        agg = F.avg("_dot")
-    else:  # FIRSTP / PASSAGE: exactly one vector per id after the view filter
-        agg = F.first("_dot")
-    return joined.groupBy("q_id", "id").agg(agg.cast("float").alias("ff_score"))
+    return _dense_pass(cand, index, qvec_df, mode)
 
 
 def ff_score(
@@ -165,8 +192,9 @@ def ff_score(
     """``Index.__call__`` equivalent (index/base.py:389-469): score a ranking.
 
     Returns a Ranking whose ``score`` IS the dense score (name
-    "fast-forward"); the sparse score is retained as column ``score_sparse``
-    for interpolation.
+    "fast-forward"), with the ``query`` column when the input has one.
+    Candidates without a vector are dropped. The input ranking is read
+    once: ``query`` rides through the dense aggregation.
 
     ``batch_size`` (reference index/base.py:445-459) exists only to bound
     the reference's single-process peak memory; here partitioning IS the
@@ -178,19 +206,14 @@ def ff_score(
     """
     spark = SparkSession.getActiveSession()
     qvec_df = _query_vectors_df(spark, ranking, encoder, query_vectors)
-    scores = compute_scores(
-        ranking.df, index, qvec_df, mode=mode, check_missing=check_missing
+    mode = mode or index.mode
+    if check_missing:
+        _check_missing_ids(ranking.df, index.vectors_for_mode(mode))
+    cand = ranking.df.select(
+        "q_id", "id", *(["query"] if ranking.has_queries else [])
     )
-    out = (
-        ranking.df.withColumnRenamed("score", "score_sparse")
-        .join(scores, ["q_id", "id"])
-        .withColumn("score", F.col("ff_score").cast("float"))
-        .drop("ff_score")
-    )
-    return Ranking(out.select(*(
-        ["q_id", "id", "score"]
-        + (["query"] if "query" in out.columns else [])
-    )), name="fast-forward")
+    out = _dense_pass(cand, index, qvec_df, mode)
+    return Ranking(out.withColumnRenamed("ff_score", "score"), name="fast-forward")
 
 
 def interpolated_rerank(
@@ -205,14 +228,30 @@ def interpolated_rerank(
     """The flagship pipeline: ``alpha*sparse + (1-alpha)*dense`` re-ranking.
 
     Equivalent of ``bm25 % N >> FFScore(idx) >> FFInterpolate(alpha)``
-    (docs/pyterrier.md:10, util/pyterrier.py:26-83), fused into one DAG so
-    the candidate join happens once.
+    (docs/pyterrier.md:10, util/pyterrier.py:26-83), and of
+    ``sparse.interpolate(ff_score(sparse, ...), alpha)``, in one pass over
+    ``sparse``: the candidates left-join the vectors and query vectors,
+    the dense aggregation groups by the candidate columns (score and
+    query ride along), and the interpolation is a projection. The first
+    stage is evaluated once per action; a candidate without a vector or
+    query vector keeps a dense score of 0, as in the outer-join
+    ``Ranking.interpolate``.
     """
-    dense = ff_score(
-        sparse, index, encoder=encoder, query_vectors=query_vectors, mode=mode,
-        check_missing=False,
+    spark = SparkSession.getActiveSession()
+    qvec_df = _query_vectors_df(spark, sparse, encoder, query_vectors)
+    scored = _dense_pass(sparse.df, index, qvec_df, mode or index.mode, how="left")
+    score = (
+        F.lit(float(alpha)) * F.coalesce(F.col("score").cast("double"), F.lit(0.0))
+        + F.lit(1.0 - float(alpha))
+        * F.coalesce(F.col("ff_score").cast("double"), F.lit(0.0))
+    ).cast("float")
+    out = Ranking(
+        scored.select(
+            "q_id", "id", score.alias("score"),
+            *(["query"] if sparse.has_queries else []),
+        ),
+        name=sparse.name,
     )
-    out = sparse.interpolate(dense, alpha)
     return out.cut(k) if k is not None else out
 
 
@@ -340,7 +379,7 @@ def _early_stopping_driver(
             T.StructField("score", T.FloatType()),
         ]
     )
-    return Ranking(spark.createDataFrame(out_rows, schema), name="fast-forward")
+    return Ranking(local_frame(spark, out_rows, schema), name="fast-forward")
 
 
 def early_stopping_scores(

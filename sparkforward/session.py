@@ -11,8 +11,10 @@ to AQE's coalescing).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -42,7 +44,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # deterministic session timezone so timestamp-derived results are stable
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _driver_mem()))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -50,6 +52,14 @@ def get_spark(
     spark = builder.getOrCreate()
     _prewarm_python_workers(spark, cores)
     return spark
+
+
+def _driver_mem() -> str:
+    """Default driver heap: 48g, capped at half the machine's physical
+    memory. A larger cap than the machine holds lets G1 grow the heap
+    past what is there, and the OS kills the JVM mid-job."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, phys // 2 >> 20)}m"
 
 
 def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
@@ -72,6 +82,33 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
     except Exception:  # noqa: BLE001 — never fail session creation over this
         pass
     spark._sfwd_prewarmed = True
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """Driver-side rows (tuples in ``schema`` order) as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` parallelizes the list into an RDD: the
+    plan scans it as ``Scan ExistingRDD`` through Python workers, one
+    Spark job per scan. A pyarrow Table is shipped to the JVM once and
+    planned as a ``LocalRelation``, which is read in-process with no job
+    and no worker; an empty table stays a ``LocalRelation <empty>`` (an
+    empty pandas frame would fall back to the RDD scan). ``schema`` is a
+    ``StructType`` or a DDL string.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def is_alive(session: SparkSession) -> bool:

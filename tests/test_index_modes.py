@@ -8,7 +8,7 @@ import pytest
 from sparkforward.encoders import LambdaEncoder
 from sparkforward.index import Mode, VectorIndex
 from sparkforward.ranking import Ranking
-from sparkforward.score import ff_score
+from sparkforward.score import ff_score, interpolated_rerank
 
 QUERIES = {"q1": "query 1", "q2": "query 2"}
 DOC_IDS = ["d0", "d0", "d1", "d2", "d3"]
@@ -110,6 +110,37 @@ def test_passage(spark, doc_psg_index, partial_ids_index, psg_ranking):
     )
     assert ff_score(psg_ranking, doc_psg_index, encoder=ENCODER, mode=Mode.PASSAGE) == expected
     assert ff_score(psg_ranking, partial_ids_index, encoder=ENCODER, mode=Mode.PASSAGE) == expected
+
+
+@pytest.mark.parametrize("mode", [Mode.MAXP, Mode.AVEP, Mode.FIRSTP, Mode.PASSAGE])
+def test_interpolated_rerank_equals_composition(spark, doc_psg_index, mode):
+    """The single-pass interpolated_rerank returns the rows of the
+    two-pass composition it replaces, ``sparse.interpolate(ff_score(...))``.
+    Covers a candidate without a vector and a query without a query
+    vector (both keep a dense score of 0), and rankings with and without
+    a ``query`` column."""
+    run = PSG_RUN if mode == Mode.PASSAGE else DOC_RUN
+    run = {q: {**docs, "x9": 7} for q, docs in run.items()}  # x9: no vector
+    run["q3"] = {"p2" if mode == Mode.PASSAGE else "d2": 11}  # q3: no qvec
+    qvecs = {"q1": [0.5, -1.0, 2.0, 0.25, 1.5], "q2": [-0.75, 0.5, 1.0, 3.0, -2.0]}
+    alpha = 0.3
+    for queries in (None, {**QUERIES, "q3": "query 3"}):
+        sparse = Ranking.from_run(spark, run, queries=queries)
+        dense = ff_score(
+            sparse, doc_psg_index, query_vectors=qvecs, mode=mode, check_missing=False
+        )
+        want = sparse.interpolate(dense, alpha)
+        got = interpolated_rerank(
+            sparse, doc_psg_index, alpha, query_vectors=qvecs, mode=mode
+        )
+        assert got.df.columns == want.df.columns
+        assert sorted(map(tuple, got.df.collect())) == sorted(map(tuple, want.df.collect()))
+        cut = interpolated_rerank(
+            sparse, doc_psg_index, alpha, query_vectors=qvecs, mode=mode, k=2
+        )
+        assert cut == want.cut(2)
+    assert got["q3"] == {("p2" if mode == Mode.PASSAGE else "d2"): pytest.approx(3.3)}
+    assert got["q1"]["x9"] == pytest.approx(2.1)
 
 
 def test_add_errors(spark):

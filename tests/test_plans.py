@@ -60,6 +60,54 @@ def test_no_cross_products_anywhere(spark, entries):
             assert "CartesianProduct" not in plan, name
 
 
+def _python_rdd_scans(df) -> list[str]:
+    """``Scan ExistingRDD`` nodes of ``df``'s physical plan (cached
+    relations and subqueries included) whose RDD starts at a Python
+    worker: a parallelized driver-side list. A ``localCheckpoint`` scan
+    reads JVM block storage and is not one."""
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if kind == "RDDScanExec" and "PythonRDD" in node.rdd().toDebugString():
+            found.append(node.toString())
+        for seq in (node.children(), node.innerChildren(), node.subqueries()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return found
+
+
+def test_no_python_list_scans_anywhere(spark, entries):
+    """Driver-side rows enter plans as LocalRelations (session.local_frame),
+    never as a parallelized Python list: that plans a ``Scan ExistingRDD``
+    which costs a Spark job through Python workers to read a few
+    driver-built rows."""
+    for name, fn in entries.items():
+        assert not _python_rdd_scans(fn(spark, SF)), name
+
+
+@pytest.mark.parametrize("n", [0, 1, 1000])
+def test_local_frame_is_local_relation(spark, n):
+    """local_frame plans any row count as a LocalRelation with exactly the
+    given schema, and float32 arrays carry the values a list-built frame
+    holds."""
+    from pyspark.sql import types as T
+
+    from sparkforward.session import local_frame
+
+    schema = T.StructType.fromDDL("q_id string, n int, v array<float>")
+    rows = [(f"q{i}", i, [i / 3.0, -0.1 * i]) for i in range(n)]
+    df = local_frame(spark, rows, schema)
+    assert df.schema == schema
+    assert not _python_rdd_scans(df)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    want = spark.createDataFrame(rows, schema).collect()
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, want))
+
+
 def test_spread_sits_at_python_boundaries_only(spark, monkeypatch):
     """The small-input spread must parallelize Python kernels WITHOUT
     taxing JVM-only scans: token_counts over a single-file corpus plans
@@ -146,6 +194,39 @@ def test_blocked_gather_joins_are_broadcast(spark, docs_index):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_interpolated_rerank_runs_first_stage_once(spark, docs_index):
+    """The flagship re-rank reads its candidate ranking once: one WAND
+    serve kernel in the plan and no sort-merge (full-outer) join, where
+    the old ff_score + Ranking.interpolate composition ran the serve three
+    times."""
+    from pyspark.sql import functions as F
+
+    from sparkforward.index import Mode, VectorIndex
+    from sparkforward.ranking import Ranking
+    from sparkforward.score import interpolated_rerank
+    from sparkforward.wand import wand_topk
+
+    index, qdf = docs_index
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    vidx = VectorIndex(
+        emb.select(
+            F.col("vec_id").alias("vec_idx"),
+            F.col("vec_id").cast("string").alias("doc_id"),
+            F.lit(None).cast("string").alias("psg_id"),
+            F.col("embedding").alias("vector"),
+        ),
+        mode=Mode.MAXP,
+    )
+    qv = emb.filter(F.col("vec_id") == 10).first()["embedding"]
+    out = interpolated_rerank(
+        Ranking(wand_topk(index, qdf, k=20).select("q_id", "id", "score")),
+        vidx, 0.2, query_vectors={"q1": qv}, k=5,
+    )
+    plan = _plan(out.df)
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_interpolate_uses_broadcast_hash_joins(spark):
